@@ -241,21 +241,12 @@ object Bench {
     val bandJson = if (probeBands)
       s""","cast_band_probes":{"start_parallel_ns":$castStartParNs,"mid_parallel_ns":$castMidParNs,"end_parallel_ns":$castEndParNs}"""
     else ""
-    // amortized shared-kernel build time (the c02 family's memoized
-    // kept-manifest artifact): reported next to the per-query mins so
-    // the one-time cost stays visible in the record instead of
-    // vanishing under min-of-2
-    val kernelEntries = Seq(
-      "neardup_kept_build_sec" ->
-        graft.operators.Curation.keptKernelBuildSec.get() / 1e9,
-      "txlog_changes_build_sec" ->
-        graft.operators.Curation.txlogChangesBuildSec.get() / 1e9,
-      "d16_index_build_sec" ->
-        graft.operators.Dedup.d16IndexBuildSec.get() / 1e9,
-      "ordered_fixture_build_sec" ->
-        graft.operators.StreamReplay.orderedFixtureBuildSec.get() / 1e9,
-      "gate_sides_build_sec" ->
-        graft.operators.StreamReplay.gateSidesBuildSec.get() / 1e9)
+    // amortized shared-kernel build time (every Artifacts.memo, one
+    // registry): reported next to the per-query mins so the one-time
+    // cost stays visible in the record instead of vanishing under
+    // min-of-2
+    val kernelEntries = Artifacts.buildSeconds
+      .map { case (name, sec) => s"${name}_build_sec" -> sec }
       .filter(_._2 > 0)
     val kernelJson = {
       val entries = kernelEntries.map { case (k, v) => s""""$k":$v""" }

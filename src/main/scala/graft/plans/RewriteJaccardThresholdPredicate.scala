@@ -43,14 +43,21 @@ object RewriteJaccardThresholdPredicate extends Rule[LogicalPlan] {
       if (next.fastEquals(cond)) j else j.copy(condition = Some(next))
   }
 
+  /** A NaN or infinite threshold is left alone: the kernel's codegen
+    * writes the threshold into Java source, where neither is a literal.
+    */
   private def rewrite(cond: Expression): Expression = cond.transform {
-    case GreaterThanOrEqual(SortedArrayJaccard(a, b), Literal(c: Double, DoubleType)) =>
+    case GreaterThanOrEqual(SortedArrayJaccard(a, b), Literal(c: Double, DoubleType))
+        if c.isFinite =>
       SortedArrayJaccardAtLeast(a, b, c, strict = false)
-    case GreaterThan(SortedArrayJaccard(a, b), Literal(c: Double, DoubleType)) =>
+    case GreaterThan(SortedArrayJaccard(a, b), Literal(c: Double, DoubleType))
+        if c.isFinite =>
       SortedArrayJaccardAtLeast(a, b, c, strict = true)
-    case LessThan(Literal(c: Double, DoubleType), SortedArrayJaccard(a, b)) =>
+    case LessThan(Literal(c: Double, DoubleType), SortedArrayJaccard(a, b))
+        if c.isFinite =>
       SortedArrayJaccardAtLeast(a, b, c, strict = true)
-    case LessThanOrEqual(Literal(c: Double, DoubleType), SortedArrayJaccard(a, b)) =>
+    case LessThanOrEqual(Literal(c: Double, DoubleType), SortedArrayJaccard(a, b))
+        if c.isFinite =>
       SortedArrayJaccardAtLeast(a, b, c, strict = false)
   }
 }

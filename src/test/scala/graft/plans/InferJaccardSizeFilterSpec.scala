@@ -23,8 +23,10 @@ class InferJaccardSizeFilterSpec extends AnyFunSuite {
   }
 
   test("rule infers size bounds next to a jaccard threshold") {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ InferJaccardSizeFilter
+    // the session is shared by every suite in the test JVM: put its
+    // exact rule list back afterwards, order included
+    val prior = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = prior :+ InferJaccardSizeFilter
     try {
       // parquet-backed pairs (a LocalRelation would be constant-folded
       // before the Filter survives into the optimized plan)
@@ -43,10 +45,7 @@ class InferJaccardSizeFilterSpec extends AnyFunSuite {
         .filter(SortedArrayJaccard(col("a.ts"), col("b.ts")) >= 0.9)
         .count()
       assert(n == nPlain, s"rule changed results: $n vs $nPlain")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == InferJaccardSizeFilter)
-    }
+    } finally spark.experimental.extraOptimizations = prior
   }
 
   test("rule is idempotent and inactive without a jaccard predicate") {

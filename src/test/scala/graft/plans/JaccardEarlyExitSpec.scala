@@ -62,12 +62,23 @@ class JaccardEarlyExitSpec extends AnyFunSuite {
     df.unpersist()
   }
 
-  test("rewrite rule swaps predicate sites and leaves value-emitting sites alone") {
+  /** Runs `body` with both Jaccard rules registered in order, then
+    * puts back the session's exact prior rule list — the session is
+    * shared with every other suite in the test JVM, and those may rely
+    * on `GraftExtensions` having registered the rules.
+    */
+  private def withJaccardRules[T](body: => T): T = {
+    val prior = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =
-      (spark.experimental.extraOptimizations.filterNot(r =>
+      (prior.filterNot(r =>
         r == InferJaccardSizeFilter || r == RewriteJaccardThresholdPredicate)
         :+ InferJaccardSizeFilter) :+ RewriteJaccardThresholdPredicate
-    try {
+    try body
+    finally spark.experimental.extraOptimizations = prior
+  }
+
+  test("rewrite rule swaps predicate sites and leaves value-emitting sites alone") {
+    withJaccardRules {
       val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select(col("doc_id"), array_sort(array_distinct(split(col("text"), " "))).as("ts"))
       // predicate site: value dropped after the >= — must rewrite, and
@@ -95,10 +106,23 @@ class JaccardEarlyExitSpec extends AnyFunSuite {
         .select(col("a.doc_id"), col("b.doc_id"))
         .count()
       assert(n == nPlain, s"rewrite changed results: $n vs $nPlain")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(r =>
-          r == InferJaccardSizeFilter || r == RewriteJaccardThresholdPredicate)
+    }
+  }
+
+  test("rewrite rule leaves a NaN or infinite threshold to the plain expression") {
+    withJaccardRules {
+      // a range, not a local relation: the optimizer would evaluate a
+      // filter over literal rows before the rule ever saw it
+      val df = spark.range(2).select(
+        array(col("id").cast("string"), lit("b")).as("x"), array(lit("0"), lit("c")).as("y"))
+      for (c <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
+        val q = df.filter(SortedArrayJaccard(col("x"), col("y")) >= c)
+        val p = q.queryExecution.optimizedPlan.toString
+        assert(!p.contains("sorted_array_jaccard_at_least"),
+          s"non-finite threshold $c was rewritten:\n$p")
+        // NaN and +Inf reject every pair, -Inf accepts both
+        assert(q.count() == (if (c == Double.NegativeInfinity) 2 else 0))
+      }
     }
   }
 }

@@ -1,6 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,10 +14,20 @@ class LevenshteinLengthPruningSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Runs `body` under `rules`, then puts back the session's exact
+    * prior rule list — the session is shared by every suite in the
+    * test JVM, and rule order matters to the Jaccard rules.
+    */
+  private def withRules[T](rules: Seq[Rule[LogicalPlan]] => Seq[Rule[LogicalPlan]])(
+      body: => T): T = {
+    val prior = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = rules(prior)
+    try body
+    finally spark.experimental.extraOptimizations = prior
+  }
+
   test("rule infers a length-gap bound next to a levenshtein threshold") {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ LevenshteinLengthPruning
-    try {
+    withRules(_ :+ LevenshteinLengthPruning) {
       // parquet-backed (a LocalRelation would constant-fold away)
       val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select(col("doc_id"), col("text"))
@@ -31,9 +43,6 @@ class LevenshteinLengthPruningSpec extends AnyFunSuite {
         .filter(levenshtein(col("a.text"), col("b.text")) <= 4)
         .count()
       assert(n == nPlain, s"rule changed results: $n vs $nPlain")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == LevenshteinLengthPruning)
     }
   }
 
@@ -50,14 +59,12 @@ class LevenshteinLengthPruningSpec extends AnyFunSuite {
     assert(LevenshteinLengthPruning(analyzedRev).toString.contains("abs("),
       "reversed form not rewritten")
     // evaluated equivalence on a frame with a null side
-    val withRule = {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LevenshteinLengthPruning
-      try df.filter(expr("levenshtein(a, b) <= 2")).collect().toSeq
-      finally spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == LevenshteinLengthPruning)
+    val withRule = withRules(_ :+ LevenshteinLengthPruning) {
+      df.filter(expr("levenshtein(a, b) <= 2")).collect().toSeq
     }
-    val plain = df.filter(expr("levenshtein(a, b) <= 2")).collect().toSeq
+    val plain = withRules(_.filterNot(_ == LevenshteinLengthPruning)) {
+      df.filter(expr("levenshtein(a, b) <= 2")).collect().toSeq
+    }
     assert(withRule == plain)
   }
 
